@@ -1,95 +1,43 @@
 """Benchmark runner: every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Stdout contract (VERDICT r7 #1): stdout carries EXACTLY ONE compact
-self-contained JSON line, guaranteed <= 1500 bytes, so any
-length-bounded tail capture (the driver keeps ~2000 chars) still
-contains one complete parseable object:
-{"metric": "total_query_wall_seconds", "value": <total_sec>,
- "unit": "sec", "sf": <sf>, "n_queries": N,
- "queries": {top-slowest name: sec, ...}, "queries_elided": M,
+One protocol, one run:
+1. warm-up: every query once at sf0.001 (JIT, codegen cache, parquet
+   footers), unrecorded;
+2. memo prebuild: every registered session memo (memo_prebuild.py) is
+   built serially, lightest-first, before the timed loop;
+3. one timed sweep over the sorted query names. The Spark cache is
+   cleared before each query, so every timing pays its own cost, and a
+   known-subsecond sentinel query is probed every _PROBE_EVERY queries;
+4. output.
+
+Headline: "value" is the sum of the "queries" map. That map holds every
+real query's memo-exclusive wall seconds (plan + execute + count) plus
+one line item per memo ledger entry: "memo_build:<name>" for builds and
+"memo_remat:<name>" for re-materializations after the between-query
+clearCache. caching.memo times both into a drainable ledger; after each
+query the bench drains it, subtracts the union of the entries' [t0, t1]
+intervals (clipped to the query window) from the query's wall time, and
+books each entry's exclusive seconds to its line item. When concurrent
+memo work makes the exclusive sum exceed that union, the excess is
+reported as "memo_overlap_s".
+
+Contention: a probe slower than _PROBE_HOT marks its surrounding window
+hot. Queries timed inside a hot window (plus any sentinel query over its
+idle-box bound) are listed as "still_hot" and the run carries a
+"contention_warning". Nothing is re-run: a flagged run is not comparable.
+
+The full record (every line item, probes, errors) is written as one JSON
+line to $SPARK_GRAFT_BENCH_OUT (default <repo>/BENCH_full_latest.json).
+Stdout carries exactly one compact JSON line of at most 1500 bytes, so a
+tail-bounded capture always holds one complete object:
+{"metric": "total_query_wall_seconds", "value": <sec>, "unit": "sec",
+ "sf": <sf>, "n_queries": N, "queries": {slowest items}, "queries_elided": M,
  "full_record": <path>, "median_s": .., "p90_s": ..,
- "probes": {"n":..,"max":..,"hot":..}, "still_hot_n": ..,
+ "probes": {"n":..,"max":..,"hot":..}, "still_hot_n": .., "errors_n": ..,
+ "memo_build_n": .., "memo_build_s": .., "memo_remat_s": ..,
  ["contention_warning": "..."]}
-
-The FULL record (every per-query timing, probe map, heal log,
-provenance) is written as one JSON line to $SPARK_GRAFT_BENCH_OUT
-(default <repo>/BENCH_full_latest.json) — the prior rounds' stdout
-full-record line exceeded the driver's tail capture, leaving two
-consecutive unparseable bench artifacts (BENCH_r06/BENCH_r07).
-
-Each query is timed end-to-end (plan + execute + collect-to-count).
-A warmup pass on sf0.001 primes the JVM/codegen so timings reflect
-steady-state execution, not first-query JIT.
-
-Contention handling (the host is CPU burst-credit limited; throttle
-transients of a few minutes were observed mid-run in r5/r6):
-- a known-subsecond sentinel query is probed every _PROBE_EVERY
-  queries; a hot probe marks the surrounding window's timings
-  untrustworthy;
-- IN-RUN SELF-HEAL (round 6): after the sweep, queries inside hot
-  windows are automatically re-run (up to SPARK_GRAFT_BENCH_HEAL_ROUNDS
-  rounds, default 2, after a SPARK_GRAFT_BENCH_HEAL_COOLDOWN idle
-  pause) and each query keeps its MINIMUM observed timing — under
-  one-sided contention noise the minimum is the closest estimate of
-  true cost. Only queries that never saw a clean window end up in
-  "contention_warning"/"still_hot".
-- CROSS-RUN SELF-HEAL (VERDICT r5 #6): set SPARK_GRAFT_BENCH_BASE to a
-  prior bench JSON and only the queries inside that run's contaminated
-  probe windows (plus queries the base run never timed, plus an
-  explicit SPARK_GRAFT_BENCH_RERUN list) are re-run; clean base
-  timings are merged in unchanged, and a re-run query keeps the
-  MINIMUM of base and re-run — the same one-sided-noise policy as the
-  in-run heal, so a burst that slips BETWEEN probes during the re-run
-  (observed: 18 s on a 2 s query with both flanking probes ≤ 0.8 s)
-  cannot overwrite a cleaner base measurement. Cross-run min-merge is
-  only sound while the code is unchanged between the two runs; for
-  REWRITTEN queries list them in SPARK_GRAFT_BENCH_FRESH instead —
-  they are re-run but their base timing is NOT min-merged (it measured
-  different code; ADVICE r9 #1), so the record carries this run's own
-  measurement. The merged record carries "merged_from" +
-  "rerun_queries" + "fresh_queries" provenance, and "hist_min" keeps
-  each re-run/fresh query's prior base value for lineage comparison.
-
-Memo attribution (VERDICT r10 #1): session-shared memo artifacts
-(caching.py) made per-query numbers ORDER-DEPENDENT — whichever query
-first touched the shared MinHash memo paid its build (driver booked
-corpus_funnel at 14.35 s where the memo-exclusive cost is ~6 s), and
-after each between-query clearCache every later toucher re-paid the
-re-materialization. caching.memo times every build and re-mat into a
-drainable ledger; the bench drains it after each timed query,
-SUBTRACTS the memo seconds from that query's wall time, and books
-builds to visible "memo_build:<name>" pseudo-entries in the queries
-map (they count toward "value"). Re-materializations — an artifact of
-the bench's own clearCache, not of any plan — are reported separately
-under "memo_remat_s" and excluded from "value": a real long-lived
-session pays each memo once.
-
-Round-12 refinements:
-- PREBUILD (VERDICT r11 #3): memo_prebuild.py is now a static registry
-  of every memo's builder, so all memos are built CONCURRENTLY in a
-  charged setup step before the timed loop (still booked to their
-  "memo_build:<name>" line items). Per-query numbers are unchanged by
-  construction (builds were already subtracted); what changes is that
-  builds no longer serialize inside the timed loop on first touch,
-  where driver-phase box contention inflated them (r11 booked
-  memo_build:minhash_est at 22.1 s vs 3.4 s clean). The ledger
-  subtraction stays: the per-query re-mat contamination the bench's
-  own clearCache causes can only be stripped reactively.
-- OVERLAP-SAFE SUBTRACTION (ADVICE r11 #2): memos build/re-mat in
-  concurrent driver threads (the sampled-audit pred/truth overlap), so
-  summing the ledger's per-thread exclusive seconds can exceed the
-  wall-clock the memos actually occupied; the per-query subtraction now
-  uses the UNION of the ledger entries' [t0, t1] intervals clipped to
-  the query window (never more than elapsed). Per-name line items keep
-  exclusive seconds (they measure work, and concurrent builds each did
-  their own work); when their sum exceeds the union the overflow is
-  surfaced as "memo_overlap_s" instead of silently double-booking.
-- STALE-ENTRY VALIDATION (ADVICE r11 #1): base-merge now drops
-  "memo_build:" entries whose memo name is not in the static registry
-  (renamed/removed memos previously survived the merge chain forever);
-  $SPARK_GRAFT_BENCH_MEMO_KEEP is an explicit comma-separated
-  allowlist for deliberate carries.
+n_queries, median_s and p90_s describe real queries only.
 """
 
 from __future__ import annotations
@@ -102,16 +50,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 _PROBE_Q = "section_rank_topk"
-# every 10 (was 25 through r5/r6a): a ~3-minute throttle transient can
-# start and decay entirely inside a 25-query window — observed in the
-# r6 self-heal run, where probes at 0/25 read 1.7 s/0.68 s yet queries
-# between them measured up to 6× their isolated re-measures. ~18 extra
-# sub-second probes per full sweep is cheap localization.
+# every 10: a throttle transient of a few minutes can start and decay
+# entirely inside a wider window
 _PROBE_EVERY = 10
-# 1.5, not 2.0: r6a showed MILD throttling (probes 1.0-1.3 s vs the
-# 0.5-0.7 s idle floor) inflating heavy queries 2-3× while staying
-# under the old threshold. The probe is warmed once at sf0.1 before
-# the loop so position-0 JIT/plan-compile noise can't false-trip.
+# idle-box probe floor is 0.5-0.7 s; mild throttling reads 1.0-1.3 s.
+# The probe is warmed once at the bench SF before the loop so
+# position-0 plan-compile noise can't false-trip.
 _PROBE_HOT = 1.5
 _SENTINELS = {"section_rank_topk": 2.0, "project_clean": 2.0}
 
@@ -123,11 +67,9 @@ def _hot_window_names(probes: dict[str, float], probe_names: dict[str, str],
     A hot probe at position P (probes fire BEFORE the query at index P)
     contaminates [P - spacing, P + spacing): throttling developed
     somewhere in the preceding window and persists into the following
-    one until a clean probe. Positions index the run's own sorted
-    to_run list, but because that list is sorted, the window maps onto
-    ANY name list as the lexicographic interval between the adjacent
-    probes' recorded names — so registry growth or subset re-runs
-    can't shift the mapping."""
+    one until a clean probe. Because the sweep runs in sorted order,
+    the window maps onto any name list as the lexicographic interval
+    between the adjacent probes' recorded names."""
     names: set[str] = set()
     for pos_s, v in probes.items():
         if v > _PROBE_HOT:
@@ -138,81 +80,12 @@ def _hot_window_names(probes: dict[str, float], probe_names: dict[str, str],
     return names
 
 
-def _contaminated_names(base: dict) -> set[str]:
-    """Query names whose timings in a prior bench record are untrusted.
-
-    A self-healed base (round 6+) records exactly which queries never
-    saw a clean window as "still_hot" — trust that. Otherwise fall
-    back to re-deriving hot probe windows from the base's probe data
-    (and for pre-r6 bases without probe_names, raw positional
-    windows)."""
-    if "still_hot" in base:
-        return set(base["still_hot"]) | set(base.get("errors", {}))
-    order = sorted(base.get("queries", {}))
-    n = len(order)
-    # window half-width = the BASE run's probe spacing (it may have
-    # been recorded under a different _PROBE_EVERY than current code)
-    pos = sorted(int(p) for p in base.get("sentinel_probes", {}))
-    spacing = max(
-        (b - a for a, b in zip(pos, pos[1:])), default=_PROBE_EVERY
-    )
-    probes = base.get("sentinel_probes", {})
-    probe_names = base.get("probe_names", {})
-    if probe_names:
-        names = _hot_window_names(probes, probe_names, order, spacing)
-    else:
-        # legacy base (pre-r6: positions only, full-run indices)
-        hot_idx: set[int] = set()
-        for pos_s, v in probes.items():
-            if v > _PROBE_HOT:
-                p = int(pos_s)
-                hot_idx.update(range(max(0, p - spacing), min(n, p + spacing)))
-        names = {order[i] for i in hot_idx}
-    # errored queries have no timing at all — always re-run
-    names.update(base.get("errors", {}))
-    return names
-
-
-def _load_base(base_path: str) -> dict:
-    """Load a prior bench record for cross-run self-heal.
-
-    Accepts a full-record file (single JSON object), a legacy
-    multi-line stdout capture (last line wins), or a compact stdout
-    summary — the latter identified by its own "queries_elided" marker
-    (it ALWAYS carries a "queries" key, elided to the top-K slowest, so
-    "queries not in base" never fires) and FOLLOWED to its full record
-    so still_hot/sentinel_probes/errors drive contamination detection
-    instead of degrading to "re-run everything except 10 un-vetted
-    timings". The recorded full_record path may have been
-    basename-shrunk or truncated by the summary's own byte budget
-    (ADVICE r9) — resolve relative to the summary file's directory, and
-    if the record is gone entirely, degrade to the compact summary
-    itself (re-run everything outside its top-K) instead of crashing."""
-    with open(base_path) as fh:
-        text = fh.read().strip()
-    try:  # full-record file (single JSON object, possibly pretty)
-        base = json.loads(text)
-    except json.JSONDecodeError:  # legacy multi-line stdout capture
-        base = json.loads(text.splitlines()[-1])
-    if "queries_elided" in base and base.get("full_record"):
-        rec = str(base["full_record"])
-        for cand in (rec, os.path.join(os.path.dirname(
-                os.path.abspath(base_path)), os.path.basename(rec))):
-            try:
-                with open(cand) as fh:
-                    base = json.loads(fh.read().strip())
-                break
-            except (OSError, json.JSONDecodeError):
-                continue
-    return base
-
-
 def _union_seconds(entries: list[dict], lo: float, hi: float) -> float:
     """Total length of the union of the entries' [t0, t1] intervals,
     clipped to [lo, hi] — the wall-clock a query actually spent inside
-    memo builds/re-mats, immune to concurrent-thread double-counting
-    (ADVICE r11 #2). Entries without timestamps (legacy records)
-    contribute their "sec" additively, still capped by the window."""
+    memo builds/re-mats, immune to concurrent-thread double-counting.
+    Entries without timestamps contribute their "sec" additively, still
+    capped by the window."""
     ivs = sorted(
         (max(e["t0"], lo), min(e["t1"], hi))
         for e in entries
@@ -233,67 +106,51 @@ def _union_seconds(entries: list[dict], lo: float, hi: float) -> float:
     return min(total + legacy, hi - lo)
 
 
-def _merge_base_timings(
-    timings: dict[str, float],
-    errors: dict[str, str],
-    base_queries: dict[str, float],
-    registered: set[str],
-    fresh: set[str] = frozenset(),
-    known_memos: frozenset[str] = frozenset(),
-    memo_fps: dict[str, str] | None = None,
-    base_memo_fps: dict[str, str] | None = None,
-) -> None:
-    """Merge a prior run's timings into this run's, in place: clean
-    base timings fill queries not re-run; a re-run query keeps
-    min(base, rerun) — contention noise is one-sided, and a throttle
-    burst can land between probes DURING the heal re-run itself.
-    Base entries for unregistered queries are dropped; a query that
-    errored this run keeps no timing at all. ``fresh`` queries
-    (rewritten since the base run) never take the base value: their
-    pre-rewrite timing measured different code (ADVICE r9 #1).
-    "memo_build:<name>" pseudo-entries merge by the same min policy
-    (same-code builds measure the same work) — list them in ``fresh``
-    when the memo's build changed, and they are VALIDATED against
-    ``known_memos`` (the static memo_prebuild registry, plus the
-    $SPARK_GRAFT_BENCH_MEMO_KEEP allowlist): a renamed or removed
-    memo's build line item would otherwise survive the base-merge
-    chain forever, silently inflating the headline value with stale
-    seconds (ADVICE r11 #1). Base entries from a PRE-attribution
-    record (no memo entries of its own) still carry memo-inclusive
-    query timings; min-merge against them is safe (memo-exclusive
-    this-run values are never larger), but list memo-sharing queries
-    in SPARK_GRAFT_BENCH_FRESH on the first post-attribution merge if
-    exact lineage matters.
+def _book_ledger(timings: dict[str, float], entries: list[dict]) -> None:
+    """Add each ledger entry's exclusive seconds to its
+    "memo_<kind>:<name>" line item (kind is "build" or "remat")."""
+    for e in entries:
+        k = f"memo_{e['kind']}:{e['name']}"
+        timings[k] = timings.get(k, 0.0) + e["sec"]
 
-    ``memo_fps``/``base_memo_fps`` (ADVICE r12 #1): builder-source
-    fingerprints (memo_prebuild.memo_fingerprints) recorded in each
-    bench output. A base memo_build entry whose fingerprint differs
-    from the current builder's — or is absent from a base that carries
-    fingerprints for this memo while the current registry does — is
-    dropped instead of min-merged: its seconds measured DIFFERENT
-    build code, so the auto-invalidation replaces the manual
-    SPARK_GRAFT_BENCH_FRESH listing for changed builders. Names
-    outside the registry (the explicit KEEP allowlist) have no
-    fingerprint on either side and merge as before."""
-    memo_fps = memo_fps or {}
-    base_memo_fps = base_memo_fps or {}
-    for name, t in base_queries.items():
-        if name.startswith("memo_build:"):
-            mname = name.split(":", 1)[1]
-            known = mname in known_memos
-            if known and mname in memo_fps:
-                known = base_memo_fps.get(mname) == memo_fps[mname]
-        else:
-            known = name in registered
-        if known and name not in errors and name not in fresh:
-            timings[name] = min(timings.get(name, float("inf")), t)
+
+def _record(timings: dict[str, float], queries: dict,
+            probes: dict[str, float], probe_names: dict[str, str]) -> dict:
+    """The full record's timing fields: headline value, line items,
+    family rollup, probes and the contention verdict."""
+    timings = {k: round(v, 3) for k, v in sorted(timings.items())}
+    fam: dict[str, float] = {}
+    for name, t in timings.items():
+        f = (name.split(":", 1)[0] if name.startswith("memo_")
+             else queries[name].__module__.rsplit(".", 1)[-1])
+        fam[f] = fam.get(f, 0.0) + t
+    real = [k for k in timings if not k.startswith("memo_")]
+    hot = _hot_window_names(probes, probe_names, real, _PROBE_EVERY)
+    tripped = {q: timings[q] for q, lim in _SENTINELS.items()
+               if timings.get(q, 0.0) > lim}
+    hot.update(tripped)
+    out = {
+        "value": round(sum(timings.values()), 4),
+        "queries": timings,
+        "sentinel_probes": probes,
+        "probe_names": probe_names,
+        "families": {k: round(v, 1) for k, v in sorted(fam.items())},
+        "still_hot": sorted(hot),
+    }
+    if hot:
+        parts = [f"{q}={v}s" for q, v in sorted(tripped.items())]
+        parts += [f"{len(hot)} queries timed in a hot probe window"]
+        out["contention_warning"] = (
+            "sentinel queries exceeded idle-box bounds "
+            f"({', '.join(parts)}); "
+            "host was likely CPU-throttled — still_hot timings unreliable"
+        )
+    return out
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    heal_rounds = int(os.environ.get("SPARK_GRAFT_BENCH_HEAL_ROUNDS", "2"))
-    heal_cooldown = float(os.environ.get("SPARK_GRAFT_BENCH_HEAL_COOLDOWN", "60"))
 
     from data_pipeline_playground_spark.queries.ml import (
         BISECTING_MAX_ITER,
@@ -307,327 +164,99 @@ def main() -> None:
 
     spark = get_spark("dpp-spark-bench")
     queries = all_queries()
+    names = sorted(queries)
 
-    # memo attribution accumulators (module docstring, VERDICT r10 #1):
-    # builds become "memo_build:<name>" line items in the queries map;
-    # re-materializations (a clearCache artifact) are reported aside.
-    memo_build: dict[str, float] = {}
-    memo_remat: dict[str, float] = {}
-    # wall seconds by which concurrent builds' exclusive sums exceeded
-    # their interval union — surfaced, never double-subtracted
-    memo_overlap = [0.0]
-
-    def _book_ledger(entries: list[dict]) -> None:
-        for e in entries:
-            if e["kind"] == "build":
-                k = f"memo_build:{e['name']}"
-                memo_build[k] = memo_build.get(k, 0.0) + e["sec"]
-            else:
-                memo_remat[e["name"]] = (
-                    memo_remat.get(e["name"], 0.0) + e["sec"]
-                )
-
-    # Effective LSH plane configuration (ADVICE r13 #2): regular query
-    # timings min-merge across runs, and the r13 derived-planes change
-    # silently altered what the whole similarity family computes per
-    # corpus size; record the mode so a base recorded under a DIFFERENT
-    # mode (pinned vs derived, or another pin) fresh-lists the family
-    # instead of mixing configurations in one lineage record.
-    from data_pipeline_playground_spark.queries import similarity as _sim
-
-    lsh_mode = (
-        f"pinned:{_sim.N_PLANES}" if _sim.N_PLANES is not None else "derived"
-    )
-    # Effective extra Spark confs (ADVICE r14 #1): $SPARK_GRAFT_EXTRA_CONFS
-    # silently changes Spark config for the whole session, so a min-merge
-    # against a base recorded under different confs would mix timings from
-    # different configurations — same contamination class as lsh_planes_mode.
-    # Recorded in every run; a mismatch fresh-lists EVERY query (confs are
-    # global, unlike the similarity-family-scoped plane mode).
-    extra_confs = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
-
-    base: dict = {}
-    fresh: set = set()
-    base_path = os.environ.get("SPARK_GRAFT_BENCH_BASE", "")
-    to_run = sorted(queries)
-    if base_path:
-        base = _load_base(base_path)
-        if base.get("extra_confs", "") != extra_confs:
-            fresh.update(queries)
-        if base.get("lsh_planes_mode") != lsh_mode:
-            fresh.update(
-                name for name, fn in queries.items()
-                if fn.__module__.rsplit(".", 1)[-1] == "similarity"
-            )
-        contaminated = _contaminated_names(base)
-        # explicit additions: suspect queries outside any flagged window
-        # (e.g. inflated vs history while nearby probes stayed sub-hot)
-        extra = os.environ.get("SPARK_GRAFT_BENCH_RERUN", "")
-        contaminated.update(q for q in extra.split(",") if q)
-        # FRESH list (ADVICE r9 #1): queries whose CODE changed since
-        # the base run. They are re-run like RERUN entries but their
-        # base timing is NOT min-merged in — cross-run min-merge is
-        # only sound while the code is unchanged, and a rewritten
-        # query min-merged against its pre-rewrite base conflates two
-        # code versions in one record.
-        fresh.update(
-            q for q in
-            os.environ.get("SPARK_GRAFT_BENCH_FRESH", "").split(",")
-            if q)
-        contaminated.update(fresh)
-        to_run = sorted(
-            name
-            for name in queries
-            if name in contaminated or name not in base.get("queries", {})
-        )
-        print(
-            f"BENCH self-heal: re-running {len(to_run)}/{len(queries)} "
-            f"queries from contaminated windows of {base_path}",
-            file=sys.stderr,
-        )
-
-    # Warmup at the smallest SF: JIT, codegen cache, parquet footers.
-    for name in to_run:
+    # 1. warm-up at the smallest SF
+    for name in names:
         try:
             queries[name](spark, "/root/testdata/sf0.001").count()
         except Exception:
             pass
 
-    def run_pass(names: list[str]):
-        """One timed sweep over ``names`` with interleaved contention
-        probes. A single end-of-run sentinel can miss MID-RUN
-        burst-credit throttling (observed: the b..p alphabetical block
-        at 4-14× with clean s..z timings) — probing throughout
-        localizes which stretch of the run is trustworthy."""
-        timings: dict[str, float] = {}
-        errors: dict[str, str] = {}
-        probes: dict[str, float] = {}
-        probe_names: dict[str, str] = {}
-
-        def probe(position: int) -> None:
-            if _PROBE_Q not in queries:
-                return
-            # the query ABOUT TO RUN at this position — lets self-heal
-            # (in-run or cross-run) map probe windows onto any registry.
-            # end-of-run marker sorts AFTER every real name so a hot
-            # final probe's window reaches the end of the list
-            probe_names[str(position)] = (
-                names[position] if position < len(names) else "\uffff"
-            )
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            try:
-                queries[_PROBE_Q](spark, sf_dir).count()
-                probes[str(position)] = round(time.perf_counter() - t0, 3)
-            except Exception:
-                pass
-
-        for q_idx, name in enumerate(names):
-            if q_idx % _PROBE_EVERY == 0:
-                probe(q_idx)
-            # Drop any cached data left by the previous query so each
-            # timing is independent of run order. Memoized frames
-            # (caching.py) that a later query retrieves are
-            # re-materialized at that retrieval; the ledger drain below
-            # strips that cost (and first-touch builds) back OUT of the
-            # query's number, so run order neither subsidizes nor
-            # penalizes a timing (VERDICT r10 #1).
-            spark.catalog.clearCache()
-            caching.drain_ledger()  # discard stray entries (warmup/probes)
-            start = time.perf_counter()
-            try:
-                queries[name](spark, sf_dir).count()
-                end = time.perf_counter()
-                elapsed = end - start
-                entries = caching.drain_ledger()
-                # subtract the UNION of memo intervals clipped to the
-                # query window — never more than elapsed, immune to
-                # concurrent-build double-counting (ADVICE r11 #2)
-                memo_sec = _union_seconds(entries, start, end)
-                excl_sum = sum(e["sec"] for e in entries)
-                if excl_sum - memo_sec > 1e-3:
-                    memo_overlap[0] += excl_sum - memo_sec
-                _book_ledger(entries)
-                timings[name] = round(max(0.001, elapsed - memo_sec), 3)
-            except Exception as exc:  # one bad query must not sink the bench
-                errors[name] = f"{type(exc).__name__}: {exc}"[:200]
-                print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
-
-        probe(len(names))  # final checkpoint
-        return timings, errors, probes, probe_names
-
-    # PREBUILD (VERDICT r11 #3): construct every registered memo for
-    # the bench sf concurrently BEFORE the timed loop, charged to the
-    # same memo_build:<name> line items reactive builds used — builds
-    # no longer serialize inside the timed loop on first touch.
-    caching.drain_ledger()  # discard warmup strays (sf0.001 keys)
+    # 2. serial memo prebuild, booked to memo_build:<name> line items
+    timings: dict[str, float] = {}
+    caching.drain_ledger()  # discard warm-up entries (sf0.001 keys)
     prebuild_failed: list[str] = []
     prebuilt = memo_prebuild.prebuild_all(spark, sf_dir, prebuild_failed)
-    _book_ledger(caching.drain_ledger())
-    memo_fps = memo_prebuild.memo_fingerprints()
+    _book_ledger(timings, caching.drain_ledger())
 
-    # warm the probe query once at the bench SF (unrecorded): the first
-    # sf0.1 execution pays plan compile + codegen, which would read as
-    # a hot probe@0 on a clean box
+    # warm the probe query once at the bench SF (unrecorded): its first
+    # execution pays plan compile + codegen, which would read as a hot
+    # probe@0 on a clean box
     if _PROBE_Q in queries:
         try:
             queries[_PROBE_Q](spark, sf_dir).count()
         except Exception:
             pass
 
-    timings, errors, probes, probe_names = run_pass(to_run)
-    hot = _hot_window_names(probes, probe_names, sorted(timings), _PROBE_EVERY)
-    # a tripped sentinel's own timing is untrusted too — heal it
-    hot.update(
-        q for q, lim in _SENTINELS.items() if timings.get(q, 0.0) > lim
-    )
+    # 3. one timed sweep with interleaved contention probes
+    errors: dict[str, str] = {}
+    probes: dict[str, float] = {}
+    probe_names: dict[str, str] = {}
+    memo_overlap = 0.0
 
-    # In-run heal: re-measure the untrusted window(s) after an idle
-    # cooldown; keep each query's MINIMUM (contention noise is
-    # one-sided). Repeat until every query has at least one
-    # clean-window measurement or the round budget runs out.
-    heal_log: list[dict] = []
-    for _ in range(heal_rounds):
-        if not hot:
-            break
-        time.sleep(heal_cooldown)
-        retry = sorted(hot)
-        r_tim, r_err, r_probes, r_pnames = run_pass(retry)
-        for name, t in r_tim.items():
-            timings[name] = min(timings.get(name, float("inf")), t)
-            errors.pop(name, None)
-        still = _hot_window_names(r_probes, r_pnames, retry, _PROBE_EVERY)
-        still.update(
-            q for q, lim in _SENTINELS.items() if r_tim.get(q, 0.0) > lim
+    def probe(position: int) -> None:
+        if _PROBE_Q not in queries:
+            return
+        # the query ABOUT TO RUN at this position; the end-of-run marker
+        # sorts after every real name so a hot final probe's window
+        # reaches the end of the list
+        probe_names[str(position)] = (
+            names[position] if position < len(names) else "\uffff"
         )
-        heal_log.append({
-            "rerun": len(retry),
-            "probes": r_probes,
-            "still_hot": sorted(still),
-        })
-        hot = still
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        try:
+            queries[_PROBE_Q](spark, sf_dir).count()
+            probes[str(position)] = round(time.perf_counter() - t0, 3)
+        except Exception:
+            pass
 
-    rerun = sorted(timings)
-    # historical minima the re-run timings were min-merged against
-    # (VERDICT r8 #7): lets a third-party read of a heal record judge
-    # each re-run entry against its prior best without chasing the
-    # base-file chain.
-    hist_min = {
-        q: base.get("queries", {})[q]
-        for q in rerun
-        if q in base.get("queries", {})
-    } if base else {}
-    if base:
-        keep = frozenset(
-            q for q in
-            os.environ.get("SPARK_GRAFT_BENCH_MEMO_KEEP", "").split(",")
-            if q
-        )
-        _merge_base_timings(
-            timings, errors, base.get("queries", {}), set(queries), fresh,
-            memo_prebuild.known_memo_names() | keep,
-            memo_fps=memo_fps,
-            base_memo_fps=base.get("memo_fingerprints", {}),
-        )
+    for q_idx, name in enumerate(names):
+        if q_idx % _PROBE_EVERY == 0:
+            probe(q_idx)
+        # memos this query retrieves re-materialize here; the ledger
+        # moves that cost onto memo_remat:<name> line items
+        spark.catalog.clearCache()
+        caching.drain_ledger()  # discard stray entries (probes)
+        start = time.perf_counter()
+        try:
+            queries[name](spark, sf_dir).count()
+            end = time.perf_counter()
+            entries = caching.drain_ledger()
+            memo_sec = _union_seconds(entries, start, end)
+            excl_sum = sum(e["sec"] for e in entries)
+            if excl_sum - memo_sec > 1e-3:
+                memo_overlap += excl_sum - memo_sec
+            _book_ledger(timings, entries)
+            timings[name] = max(0.001, end - start - memo_sec)
+        except Exception as exc:  # one bad query must not sink the bench
+            errors[name] = f"{type(exc).__name__}: {exc}"[:200]
+            print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
+    probe(len(names))  # final checkpoint
 
-    # book this run's memo builds as line items (min-merged against any
-    # base entries the merge above already placed — same-code builds
-    # measure the same work, and contention noise is one-sided)
-    for k, v in memo_build.items():
-        timings[k] = round(min(timings.get(k, float("inf")), v), 3)
-
-    total = round(sum(timings.values()), 4)
+    # 4. output
     out = {
         "metric": "total_query_wall_seconds",
-        "value": total,
         "unit": "sec",
-        "queries": {k: timings[k] for k in sorted(timings)},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        # fidelity knobs that change compute, recorded so round totals
-        # stay attributable to engine changes (ADVICE r5 #2)
+        # fidelity knobs that change compute
         "ml_iterations": {
             "kmeans_max_iter": KMEANS_MAX_ITER,
             "lda_max_iter": LDA_MAX_ITER,
             "bisecting_max_iter": BISECTING_MAX_ITER,
             "pic_max_iter": PIC_MAX_ITER,
         },
+        **_record(timings, queries, probes, probe_names),
+        "memo_prebuilt_n": len(prebuilt),
     }
     if errors:
         out["errors"] = errors
-    if base:
-        out["merged_from"] = base_path
-        out["rerun_queries"] = rerun
-        if fresh:
-            # rewritten queries: timing is THIS run's alone (no base
-            # min-merge); hist_min still shows the pre-rewrite value
-            # for lineage comparison.
-            out["fresh_queries"] = sorted(fresh)
-        if hist_min:
-            out["hist_min"] = hist_min
-    if memo_remat:
-        # clearCache-artifact seconds stripped from query timings and
-        # NOT counted in "value" (a long-lived session pays each memo
-        # once — the build line items above)
-        out["memo_remat_s"] = {
-            k: round(v, 3) for k, v in sorted(memo_remat.items())
-        }
-    if memo_overlap[0] > 0.05:
-        # concurrent builds' exclusive-second sum exceeded their wall
-        # union by this much (work done in parallel threads) — visible
-        # so the per-name line items' sum stays auditable vs "value"
-        out["memo_overlap_s"] = round(memo_overlap[0], 3)
-    out["memo_prebuilt_n"] = len(prebuilt)
+    if memo_overlap > 0.05:
+        out["memo_overlap_s"] = round(memo_overlap, 3)
     if prebuild_failed:
-        # ADVICE r12 #2: a failed prebuild reverts that memo to
-        # first-touch accounting — name it in the record, next to the
-        # count, instead of hiding it inside a smaller memo_prebuilt_n
+        # a failed prebuild reverts that memo to first-touch accounting
         out["memo_prebuild_failed"] = prebuild_failed
-    # builder-source fingerprints (ADVICE r12 #1) — next run's merge
-    # validates its base memo_build entries against these
-    out["memo_fingerprints"] = memo_fps
-    # effective LSH plane config (ADVICE r13 #2) — next run's merge
-    # fresh-lists the similarity family if this differs
-    out["lsh_planes_mode"] = lsh_mode
-    # effective extra-confs string (ADVICE r14 #1) — next run's merge
-    # fresh-lists everything if this differs
-    out["extra_confs"] = extra_confs
-    out["sentinel_probes"] = probes
-    out["probe_names"] = probe_names
-    # per-module family rollup of the merged timings (compact-summary
-    # material: round totals attributable at a glance)
-    fam: dict[str, float] = {}
-    for name, t in timings.items():
-        if name.startswith("memo_build:"):
-            f = "memo_build"
-        else:
-            f = queries[name].__module__.rsplit(".", 1)[-1]
-        fam[f] = fam.get(f, 0.0) + t
-    out["families"] = {k: round(v, 1) for k, v in sorted(fam.items())}
-    if heal_log:
-        out["heal"] = heal_log
-    # Contention verdict AFTER healing: only queries that never saw a
-    # clean window (or sentinels still above their idle-box bound in
-    # the final merged timings) make the run non-comparable — label it
-    # so a throttled bench self-identifies instead of reading as a 10×
-    # plan regression. "still_hot" is the exact untrusted set; a later
-    # SPARK_GRAFT_BENCH_BASE run re-runs only those.
-    tripped = {
-        q: timings[q]
-        for q, lim in _SENTINELS.items()
-        if q in rerun and timings.get(q, 0.0) > lim
-    }
-    out["still_hot"] = sorted(hot)
-    if tripped or hot:
-        parts = [f"{q}={v}s" for q, v in sorted(tripped.items())]
-        parts += [f"{len(hot)} queries never measured in a clean window"]
-        out["contention_warning"] = (
-            "sentinel queries exceeded idle-box bounds "
-            f"({', '.join(parts)}); "
-            "host was likely CPU-throttled — still_hot timings unreliable"
-        )
-    # FULL record goes to a file (it is ~15 KB at 288 queries — far
-    # beyond any tail-bounded stdout capture); stdout gets ONE compact
-    # summary line guaranteed to fit in the capture window.
     full_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -645,17 +274,13 @@ def _compact_summary(out: dict, full_path: str,
     """One self-contained stdout object, <= ``budget`` bytes serialized.
 
     Keeps the driver-contract fields (metric/value/unit/sf/queries) but
-    elides the per-query map to the slowest K — trimming K, then the
-    still-hot sample, then the warning text until the line fits."""
+    elides the line-item map to the slowest K — trimming K, then the
+    still-hot sample and family rollup, then the warning text until the
+    line fits. Memo line items may appear among the slowest but are
+    summarized by their own totals, not in n_queries/median/p90."""
     timings: dict[str, float] = out["queries"]
-    # median/p90/n_queries describe REAL queries; memo_build line items
-    # stay in the map (and can appear in the top-slowest table) but are
-    # summarized by their own count + total.
-    real = [v for k, v in timings.items()
-            if not k.startswith("memo_build:")]
-    vals = sorted(real)
+    vals = sorted(v for k, v in timings.items() if not k.startswith("memo_"))
     n = len(vals)
-    memo_n = len(timings) - n
     slowest = sorted(timings, key=timings.get, reverse=True)
     probes = out.get("sentinel_probes", {})
     summary: dict = {
@@ -677,18 +302,17 @@ def _compact_summary(out: dict, full_path: str,
         "still_hot_n": len(out.get("still_hot", [])),
         "errors_n": len(out.get("errors", {})),
     }
-    if memo_n:
-        summary["memo_build_n"] = memo_n
-        summary["memo_build_s"] = round(
-            sum(v for k, v in timings.items()
-                if k.startswith("memo_build:")), 1)
+    builds = [v for k, v in timings.items() if k.startswith("memo_build:")]
+    remats = [v for k, v in timings.items() if k.startswith("memo_remat:")]
+    if builds:
+        summary["memo_build_n"] = len(builds)
+        summary["memo_build_s"] = round(sum(builds), 1)
+    if remats:
+        summary["memo_remat_s"] = round(sum(remats), 1)
     if out.get("still_hot"):
         summary["still_hot_sample"] = out["still_hot"][:5]
     if out.get("contention_warning"):
         summary["contention_warning"] = out["contention_warning"]
-    if out.get("merged_from"):
-        summary["merged_from"] = out["merged_from"]
-        summary["rerun_n"] = len(out.get("rerun_queries", []))
     if out.get("families"):
         summary["families"] = out["families"]
 
@@ -702,18 +326,14 @@ def _compact_summary(out: dict, full_path: str,
         if "contention_warning" in summary:
             summary["contention_warning"] = (
                 summary["contention_warning"][:117] + "...")
-    # last resort: env-supplied strings (full_record / merged_from are
-    # paths embedded verbatim; "sf" falls back to the WHOLE
-    # $SPARK_GRAFT_SF_DIR when the path carries no "sf" marker) can
-    # push even the top-0 form past the budget — shrink them to
-    # basenames, then hard-truncate, so the <=1.5 KB tail-capture
-    # contract holds for ANY input. Numeric sf values are never
-    # touched (only str-typed entries are shrinkable).
-    _shrinkable = ("full_record", "merged_from", "sf")
-
+    # last resort: env-supplied strings (full_record is a path embedded
+    # verbatim; "sf" falls back to the WHOLE $SPARK_GRAFT_SF_DIR when
+    # the path carries no "sf" marker) can push even the top-0 form
+    # past the budget — shrink them to basenames, then hard-truncate.
+    # Numeric sf values are never touched.
     def _strkeys():
-        return [k for k in _shrinkable if isinstance(summary.get(k), str)
-                and summary[k]]
+        return [k for k in ("full_record", "sf")
+                if isinstance(summary.get(k), str) and summary[k]]
 
     for key in _strkeys():
         if len(json.dumps(summary, separators=(",", ":"))) <= budget:

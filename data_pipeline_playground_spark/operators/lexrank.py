@@ -1,13 +1,13 @@
 """Distributed LexRank (reference N10, summarize.py:5-26 via sumpy —
-re-implemented natively: TF-IDF vectors → cosine-similarity graph →
-damped power-iteration centrality → per-group top-k).
+re-implemented natively: TF-IDF weights → per-group cosine-similarity
+graph → damped power-iteration centrality → per-group top-k).
 
 The reference refit LexRank per HTTP request over a handful of texts;
-here the whole computation is DataFrame-parallel: the similarity graph
-is a term-keyed equi-join (inverted index, not all-pairs), and each
-power-iteration step is one join+aggregate over the edge list. At
-100 TB the edge list is the only super-linear object, and it is bounded
-per group by the similarity threshold.
+here the corpus-wide smooth-idf weights are DataFrame-parallel, and the
+per-group graph + power iteration runs as dense numpy in one
+applyInPandas pass (one shuffle by group). Dense per-group work is
+O(members²) in one Python worker, so callers whose groups grow with
+the corpus pass a ``group_cap`` (see lexrank_scores_grouped).
 """
 
 from __future__ import annotations
@@ -22,127 +22,12 @@ N_ITER = 8
 SIM_EDGE_THRESHOLD = 0.10
 
 
-def tfidf_unit_vectors(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """(doc, term, weight) rows, L2-normalized per doc.
-
-    Smooth-idf TF-IDF (reference cluster.py:25-30): tf * (ln((N+1)/(df+1))+1),
-    then w / sqrt(Σ w² per doc) via a window — no ml.Vector, stays SQL.
-    """
-    tok = docs.select(F.col(id_col).alias("doc_id"), F.explode(tokenize(F.col(text_col))).alias("term"))
-    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = docs.select(F.countDistinct(id_col).alias("n_docs"))
-    # df_ carries one row per DISTINCT TERM — vocabulary-sized, which
-    # grows with the corpus, so it must NOT be hint-broadcast (round-13
-    # third-decade find: the forced broadcast made the grouped-LexRank
-    # stage read exponent 1.95 at 1.5M docs; 91.8 → 33.8 s with the
-    # hint removed). AQE still converts to broadcast at runtime when
-    # the measured df_ is small, so bounded-vocab plans are unchanged.
-    w = (
-        tf.join(df_, "term")
-        .join(F.broadcast(n))
-        .withColumn("w", F.col("tf") * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0))
-    )
-    norm_w = Window.partitionBy("doc_id")
-    return (
-        w.withColumn("norm", F.sqrt(F.sum(F.col("w") * F.col("w")).over(norm_w)))
-        .select("doc_id", "term", (F.col("w") / F.col("norm")).alias("w"))
-    )
-
-
-def similarity_edges(vectors: DataFrame, groups: DataFrame) -> DataFrame:
-    """Within-group cosine edges ≥ threshold, as (group, src, dst, sim).
-
-    Inverted-index join on term: cost ∝ Σ_term df², not n² — the 100 TB
-    shape (rare terms dominate; a df cap can bound hubs if needed).
-    """
-    v = vectors.join(groups, "doc_id")
-    a = v.select(F.col("group").alias("g"), F.col("doc_id").alias("src"),
-                 F.col("term").alias("t"), F.col("w").alias("wa"))
-    b = v.select(F.col("group").alias("g2"), F.col("doc_id").alias("dst"),
-                 F.col("term").alias("t2"), F.col("w").alias("wb"))
-    return (
-        a.join(b, (F.col("t") == F.col("t2")) & (F.col("g") == F.col("g2"))
-               & (F.col("src") != F.col("dst")))
-        .groupBy(F.col("g").alias("group"), "src", "dst")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("sim"))
-        .filter(F.col("sim") >= SIM_EDGE_THRESHOLD)
-    )
-
-
-def lexrank_scores(edges: DataFrame, members: DataFrame) -> DataFrame:
-    """Damped power iteration over the row-normalized similarity graph.
-
-    score_i = d/N_g + (1-d) * Σ_j (sim_ji / deg_j) * score_j, per group.
-    N_ITER fixed-point steps; edges are cached once, every step is a
-    single broadcast-free join + aggregate keyed on the graph.
-    """
-    # All self-lineage joins use renamed columns to avoid ambiguous
-    # attribute resolution (deg/trans/scores all derive from edges).
-    deg = edges.groupBy(
-        F.col("group").alias("dgroup"), F.col("src").alias("dsrc")
-    ).agg(F.sum("sim").alias("deg"))
-    trans = (
-        edges.join(
-            deg,
-            (F.col("group") == F.col("dgroup")) & (F.col("src") == F.col("dsrc")),
-        )
-        .select("group", "src", "dst", (F.col("sim") / F.col("deg")).alias("p"))
-    ).cache()
-    sizes = members.groupBy(F.col("group").alias("zgroup")).agg(
-        F.count(F.lit(1)).alias("n_g")
-    )
-    base = members.join(
-        sizes, F.col("group") == F.col("zgroup")
-    ).select("group", "doc_id", "n_g").cache()
-    scores = base.select(
-        "group", "doc_id", (F.lit(1.0) / F.col("n_g")).alias("score")
-    )
-    for _iter in range(N_ITER):
-        prev = scores.select(
-            F.col("group").alias("sgroup"),
-            F.col("doc_id").alias("sdoc"),
-            F.col("score").alias("sval"),
-        )
-        contrib = (
-            trans.join(
-                prev,
-                (F.col("src") == F.col("sdoc")) & (F.col("group") == F.col("sgroup")),
-            )
-            .groupBy(
-                F.col("group").alias("cgroup"), F.col("dst").alias("cdoc")
-            )
-            .agg(F.sum(F.col("p") * F.col("sval")).alias("csum"))
-        )
-        scores = (
-            base.join(
-                contrib,
-                (F.col("group") == F.col("cgroup")) & (F.col("doc_id") == F.col("cdoc")),
-                "left",
-            )
-            .select(
-                "group",
-                "doc_id",
-                (
-                    F.lit(DAMPING) / F.col("n_g")
-                    + F.lit(1.0 - DAMPING) * F.coalesce(F.col("csum"), F.lit(0.0))
-                ).alias("score"),
-            )
-        )
-        # truncate lineage mid-run: 8 nested join plans make Catalyst
-        # re-optimization super-linear (~40% of wall time at sf0.1)
-        if (_iter + 1) % 4 == 0 and _iter + 1 < N_ITER:
-            scores = scores.localCheckpoint(eager=True)
-    return scores
-
-
 def tfidf_term_weights(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id",
                        tok: DataFrame | None = None) -> DataFrame:
     """(doc, term, w) smooth-idf weights, NOT normalized — the input to
-    the grouped fast path, which L2-normalizes per doc in-block (same
-    semantics as tfidf_unit_vectors minus its window shuffle).
+    the grouped paths, which L2-normalize per doc in-block. Smooth-idf
+    (reference cluster.py:25-30): tf * (ln((N+1)/(df+1))+1).
 
     ``tok``: optional pre-exploded (doc_id, term) rows — pass the
     pipeline's cached tokenization to avoid re-tokenizing the corpus
@@ -156,9 +41,12 @@ def tfidf_term_weights(docs: DataFrame, text_col: str = "text",
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.select(F.countDistinct(id_col).alias("n_docs"))
-    # no broadcast hint on the vocabulary-sized df_ — see
-    # tfidf_unit_vectors (round-13 third-decade find; AQE broadcasts
-    # small vocabularies at runtime anyway)
+    # df_ carries one row per DISTINCT TERM — vocabulary-sized, which
+    # grows with the corpus, so it must NOT be hint-broadcast (round-13
+    # third-decade find: the forced broadcast made the grouped-LexRank
+    # stage read exponent 1.95 at 1.5M docs; 91.8 → 33.8 s with the
+    # hint removed). AQE still converts to broadcast at runtime when
+    # the measured df_ is small.
     return (
         tf.join(df_, "term")
         .join(F.broadcast(n))
@@ -247,17 +135,14 @@ def lexrank_scores_grouped(weights: DataFrame, groups: DataFrame,
                            id_type: str = "bigint",
                            group_cap: int | None = None,
                            cap_observation=None) -> DataFrame:
-    """Bounded-group LexRank fast path: one shuffle by group, then the
-    whole pipeline (L2 normalize → cosine matrix → threshold → damped
-    power iteration) runs as dense numpy per group via applyInPandas
-    (the per-group model-fitting shape SURVEY §2.11 prescribes).
-
-    Identical spec to similarity_edges + lexrank_scores — same smooth-idf
-    weights, threshold, damping, iteration count; float summation order
-    differs (BLAS vs join-agg), which rows-only checks permit. Use this
-    when every group fits one executor's memory (clusters/sections, the
-    reference's shape: a cluster is ~tens of articles); the DataFrame
-    power iteration remains the unbounded-group path.
+    """Per-group LexRank: one shuffle by group, then the whole pipeline
+    (L2 normalize → cosine matrix → threshold SIM_EDGE_THRESHOLD →
+    N_ITER damped power-iteration steps) runs as dense numpy per group
+    via applyInPandas (the per-group model-fitting shape SURVEY §2.11
+    prescribes). score_i = d/N_g + (1-d) * Σ_j (sim_ji / deg_j) * score_j.
+    Float summation order is BLAS's, which rows-only checks permit.
+    Every group must fit one executor's memory (clusters/sections, the
+    reference's shape: a cluster is ~tens of articles).
 
     ``group_cap`` (round 12 — the 100× probe found the unbounded
     failure mode): the dense per-group work is O(members²) memory in
@@ -311,8 +196,7 @@ def similarity_edges_grouped(weights: DataFrame, groups: DataFrame,
                              top_m: int | None = None) -> DataFrame:
     """Within-group cosine edge list (src < dst, sim ≥ threshold) via the
     bounded-group fast path: one shuffle by group, then dense numpy per
-    block — same spec as similarity_edges (L2-normalize → cosine →
-    threshold) without the inverted-index join's Σ df² blowup. Feeds
+    block (L2-normalize → cosine → threshold SIM_EDGE_THRESHOLD). Feeds
     graph algorithms that want an explicit edge list (PIC, components).
 
     ``top_m``: optional kNN sparsification — keep each node's top-m

@@ -326,7 +326,7 @@ def trade_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- value-checked LexRank power iteration ---------------------------------
 #
-# The DataFrame damped power iteration in operators/lexrank.py is
+# The grouped damped power iteration in operators/lexrank.py is
 # rows-only (float summation order differs between engines). This twin
 # pins the ALGORITHM's values with parity-safe arithmetic so the driver
 # can value-check the iteration machinery itself (the pagerank_nations
@@ -593,7 +593,7 @@ def lexrank_scores_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if (i + 1) % 4 == 0 and i + 1 < LEXC_ITERS:
             # truncate lineage: 8 nested join plans make Catalyst
-            # re-optimization super-linear (same as operators/lexrank.py)
+            # re-optimization super-linear
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("doc_id", "grp", F.col("s").cast("double").alias("score"))
 

@@ -321,9 +321,7 @@ def lexrank_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     over each cluster's texts/titles, head(3) at reddit_api.py:148-149).
     Source groups are bounded (≤ a few hundred docs), so this uses the
     grouped fast path: corpus-wide smooth-idf weights, then per-group
-    cosine graph + 8 power-iteration steps in one applyInPandas pass
-    (operators/lexrank.py keeps the all-DataFrame power iteration for
-    unbounded groups)."""
+    cosine graph + 8 power-iteration steps in one applyInPandas pass."""
     docs = table(spark, sf_dir, "documents")
     groups = docs.select("doc_id", F.col("source").alias("group"))
     weights = _doc_weights_memo(spark, sf_dir)

@@ -43,33 +43,6 @@ BYTE_FIELDS = (
 )
 
 
-def _ui_spark(cpus: str):
-    """get_spark's exact configs, UI enabled on a fixed port so the
-    status REST API is readable (the shared factory disables the UI
-    for the test harness)."""
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dpp-shuffle-profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.default.parallelism", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g")
-        )
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.warehouse.dir", "/tmp/dpp-spark-warehouse")
-        .getOrCreate()
-    )
-
-
 # REST base derived from the session's ACTUAL UI binding (ADVICE r13
 # #4): on a port conflict Spark retries UI_PORT+1 (spark.port.maxRetries),
 # so querying the configured constant would hit nothing — or another
@@ -108,9 +81,15 @@ def main() -> None:
     args = p.parse_args()
 
     from data_pipeline_playground_spark.registry import all_queries
+    from data_pipeline_playground_spark.session import get_spark
 
-    spark = _ui_spark(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    # get_spark disables the UI; extra confs are applied last, so these
+    # enable it on a fixed port for the status REST API
+    os.environ["SPARK_GRAFT_EXTRA_CONFS"] = ";".join(filter(None, (
+        os.environ.get("SPARK_GRAFT_EXTRA_CONFS", ""),
+        f"spark.ui.enabled=true;spark.ui.port={UI_PORT}",
+    )))
+    spark = get_spark("dpp-shuffle-profile")
     global _UI_BASE
     ui = spark.sparkContext.uiWebUrl
     if ui:
