@@ -22,6 +22,7 @@ from data_pipeline_playground_spark.operators.lexrank import (
     top_k_representatives,
 )
 from data_pipeline_playground_spark.sources.http_sources import rank_sections
+from data_pipeline_playground_spark.tables import local_frame
 
 
 def run_service_pipeline(sections: DataFrame, articles: DataFrame,
@@ -35,7 +36,7 @@ def run_service_pipeline(sections: DataFrame, articles: DataFrame,
     """
     spark = sections.sparkSession
     ranked = rank_sections(sections).select("line")
-    uncat = spark.createDataFrame([("Uncategorized",)], "line string")
+    uncat = local_frame(spark, [("Uncategorized",)], "line string")
     wanted = ranked.unionByName(uncat)  # U1 prepend (reddit_api.py:103)
 
     # J1 index-join articles → kept sections; P6 drop failed fetches
@@ -52,7 +53,13 @@ def run_service_pipeline(sections: DataFrame, articles: DataFrame,
     )
 
     survivors = fuzzy_dedup_survivors(arts.select("doc_id", "text"))
-    arts = arts.join(survivors, "doc_id")
+    # materialized once: TF-IDF, the LexRank groups and the section
+    # aggregation below each read it, and lazily each would re-plan the
+    # filter → broadcast join → fuzzy dedup subtree (24 query stages, 13
+    # of them ReusedExchange, per request). localCheckpoint, not cache:
+    # the ContextCleaner frees the blocks when the frame goes out of
+    # scope (operators/dedup.py does the same for its signature table).
+    arts = arts.join(survivors, "doc_id").localCheckpoint(eager=True)
 
     # N10/T4: LexRank top-k representative articles per section
     # (sections are bounded groups → grouped fast path)

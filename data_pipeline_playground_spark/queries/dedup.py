@@ -53,8 +53,11 @@ WHERE NOT EXISTS (
 def dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy title dedup (reference pipeline.py:22-42): survivor ids.
 
-    Survivors are reused by entry(), news_pipeline, and this query —
-    memoized per (session, sf_dir) so the similarity join runs once.
+    Memoized per (session, sf_dir) as ``dedup_fuzzy_survivors``, so
+    repeat calls (the bench's prebuild, then the query; the driver's
+    ``entry()`` smoke at sf0.001) run the similarity join once.
+    news_pipeline does not read this memo: it dedups through
+    dedup_fuzzy_minhash, which reads the ``fuzzy_title_pairs`` memo.
     """
     from data_pipeline_playground_spark.caching import memo
 

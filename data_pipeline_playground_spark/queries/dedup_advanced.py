@@ -32,7 +32,7 @@ from data_pipeline_playground_spark.operators.minhash import (
     signatures,
 )
 from data_pipeline_playground_spark.registry import query
-from data_pipeline_playground_spark.tables import table
+from data_pipeline_playground_spark.tables import local_frame, table
 
 # ---- shared SQL fragments --------------------------------------------------
 
@@ -562,7 +562,8 @@ def _simhash_pairs_build(spark: SparkSession, sf_dir: str):
     sh.count()
     fp = sh.select("simhash").distinct()
     kcols = [f"b{k}" for k in range(MATCH_BLOCKS)]
-    bp = spark.createDataFrame(
+    bp = local_frame(
+        spark,
         [(p, *combo) for p, combo in enumerate(BLOCK_COMBOS)],
         ", ".join(["p int"] + [f"{c} int" for c in kcols]),
     )

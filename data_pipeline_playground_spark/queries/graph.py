@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_playground_spark.registry import query
-from data_pipeline_playground_spark.tables import table
+from data_pipeline_playground_spark.tables import local_frame, table
 
 PR_ITERS = 5
 PR_DAMPING = 0.85
@@ -236,7 +236,7 @@ def nation_trade_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .localCheckpoint(eager=True)  # consumed once per BFS round
     )
-    d = spark.createDataFrame([(HOP_SRC, 0)], "node string, hops int")
+    d = local_frame(spark, [(HOP_SRC, 0)], "node string, hops int")
     for _ in range(HOP_MAX):
         step = (
             sparse.join(F.broadcast(d), sparse.src == d.node)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_playground_spark.registry import query
-from data_pipeline_playground_spark.tables import table
+from data_pipeline_playground_spark.tables import local_frame, table
 
 
 def _dec(col, prec: int = 18, scale: int = 2):
@@ -387,7 +387,7 @@ def section_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sections = (
         docs.select(F.col("source").alias("section"))
         .distinct()
-        .unionByName(spark.createDataFrame([("Uncategorized",)], "section string"))
+        .unionByName(local_frame(spark, [("Uncategorized",)], "section string"))
     )
     return (
         sections.withColumn(

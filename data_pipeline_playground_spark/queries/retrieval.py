@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from data_pipeline_playground_spark.functions.text import tokenize
 from data_pipeline_playground_spark.registry import query
-from data_pipeline_playground_spark.tables import table
+from data_pipeline_playground_spark.tables import local_frame, table
 
 _SQL_TOKENS = (
     "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')"
@@ -623,9 +623,7 @@ def bm25_prf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dl = t.select("doc_id", F.size("toks").alias("dl")).cache()
     st = dl.agg(F.avg("dl").alias("avgdl"), F.count(F.lit(1)).alias("n_docs"))
     tok = t.select("doc_id", F.explode("toks").alias("term"))
-    q1 = t.sparkSession.createDataFrame(
-        [(w,) for w in BM25_QUERY], "term string"
-    )
+    q1 = local_frame(spark, [(w,) for w in BM25_QUERY], "term string")
     sc1 = _bm25_pass(tok, dl, st, q1)
     w1 = Window.orderBy(F.desc(F.round(F.col("s"), 6)), F.asc("doc_id"))
     fb = (

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_playground_spark.registry import query
-from data_pipeline_playground_spark.tables import table
+from data_pipeline_playground_spark.tables import local_frame, table
 
 N_QUERY_VECTORS = 10  # vec_id < 10 are the "query" set
 TOP_K = 5
@@ -482,7 +482,8 @@ def ann_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "v", "nv", F.col("prediction").alias("cell")
         )
         # centroid table: tiny (k × dim) — broadcast as array<double>
-        centroids = spark.createDataFrame(
+        centroids = local_frame(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())],
             "centroid_id int, cv array<double>",
         )

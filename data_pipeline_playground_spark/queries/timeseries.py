@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_playground_spark.registry import query
-from data_pipeline_playground_spark.tables import table
+from data_pipeline_playground_spark.tables import local_frame, table
 
 # --- range-interval rolling window ------------------------------------------
 
@@ -975,9 +975,7 @@ def revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         (rev0 - rev0 % 1).cast("decimal(12,0)").alias("rev")
     )
-    lags = spark.createDataFrame(
-        [(k,) for k in ACF_LAGS], "lag INT"
-    )
+    lags = local_frame(spark, [(k,) for k in ACF_LAGS], "lag INT")
     a = daily.select(F.col("day").alias("d_a"), F.col("rev").alias("x"))
     b = daily.select(F.col("day").alias("d_b"), F.col("rev").alias("y"))
     pairs = (

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_pipeline_playground_spark.registry import query
-from data_pipeline_playground_spark.tables import table
+from data_pipeline_playground_spark.tables import local_frame, table
 
 
 def _dec6(col):
@@ -631,9 +631,7 @@ def event_mix_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = wk.groupBy("week", "event_type").agg(F.count(F.lit(1)).alias("obs"))
     weeks = wk.select("week").distinct()
-    types = wk.sparkSession.createDataFrame(
-        [(t,) for t in _EVENT_TYPES], "event_type string"
-    )
+    types = local_frame(spark, [(t,) for t in _EVENT_TYPES], "event_type string")
     dense = (
         weeks.crossJoin(F.broadcast(types))
         .join(o, ["week", "event_type"], "left")

@@ -29,6 +29,13 @@ def get_spark(app_name: str = "data-pipeline-playground-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Janino class cache (static: set at create time). Spark's default
+        # of 100 entries is below one service request's working set (99–111
+        # generated classes per run_service_pipeline call, pyspark 4.1.2),
+        # so warm requests kept evicting and recompiling: 42–57 compiles on
+        # every warm request of 14 seeded ones. At 1000 most warm requests
+        # compile nothing (a few compile 2–4 classes for a new plan shape).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # static config — set at create time so bucketed-table tests
         # never write a spark-warehouse/ dir into the repo cwd
         .config("spark.sql.warehouse.dir", "/tmp/dpp-spark-warehouse")
